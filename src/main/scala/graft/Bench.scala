@@ -10,6 +10,12 @@ object Bench {
   def runFullPlan(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
+  /** Seconds at 4 decimals for the JSON artifacts, with a '.' separator
+    * whatever the JVM's default locale (under de_DE `f"%.4f"` prints
+    * `1,2345`, which is not a JSON number).
+    */
+  def decimal4(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -208,11 +214,10 @@ object Bench {
     // truncating mid-object (which cost r13 its entire round-over-round
     // per-query comparison: n_common=0). Values, methodology, and the
     // one-line stdout contract are unchanged.
-    def fmt(v: Double): String = f"$v%.4f"
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + decimal4(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","methodology":"noop-sink full-plan execution; r1 used count(), which let Catalyst prune unaggregated projections"}"""
+    val json = s"""{"metric":"total","value":${decimal4(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","methodology":"noop-sink full-plan execution; r1 used count(), which let Catalyst prune unaggregated projections"}"""
     println(json)
     // the one-line stdout contract stands, but a 146-query map exceeds
     // some log-tail captures — persist the same line to a file so
@@ -230,7 +235,7 @@ object Bench {
     // loadavg at start/end — the provenance that makes two diverging
     // full runs adjudicable from the artifacts alone
     try {
-      def d(v: Double) = if (v.isNaN) "-1" else f"$v%.4f"
+      def d(v: Double) = if (v.isNaN) "-1" else decimal4(v)
       val detail = results.map { case (name, reported) =>
         val all = attemptLog.getOrElse(name, Nil)
         val ok = all.filter(_ >= 0).sorted
@@ -241,7 +246,7 @@ object Bench {
           s""""min":${d(if (ok.isEmpty) -1.0 else ok.head)},"median":${d(med)},""" +
           s""""reported":${d(reported)}}"""
       }.mkString("{", ",", "}")
-      val dj = s"""{"sf":"$sfDir","loadavg_start":"${loadSamples.head}","loadavg_end":"${loadSamples.last}","total_reported":${f"$total%.4f"},"queries":$detail}"""
+      val dj = s"""{"sf":"$sfDir","loadavg_start":"${loadSamples.head}","loadavg_end":"${loadSamples.last}","total_reported":${decimal4(total)},"queries":$detail}"""
       val outName =
         if (persistArtifacts) benchOut.stripSuffix(".json") + "_detail.json"
         else "target/bench_detail_scoped.json"

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * provenance list, contacts promoted from contributors
   * (utils.py:1541-1549,1658-1662 truthy is_contact set).
   *
-  * Everything is built with collect_list(struct(...)) aggregations keyed
-  * by dataset, so envelope assembly for N datasets is one shuffle, not
-  * N driver round trips.
+  * The three inputs are tagged into one union and folded by a single
+  * collect_list aggregation keyed on dataset_id, so envelope assembly for
+  * N datasets is one shuffle, not N driver round trips.
   */
 object Envelope {
 
@@ -19,11 +19,6 @@ object Envelope {
   val TruthySet: Seq[String] = Seq("TRUE", "T", "1", "Y", "YES")
 
   def isTruthy(c: Column): Column = upper(trim(c)).isin(TruthySet: _*)
-
-  /** Promote contacts from a contributors table (per-dataset). */
-  def contacts(contributors: DataFrame): DataFrame =
-    contributors.filter(isTruthy(col("is_contact")))
-      .select("dataset_id", "name", "email", "affiliation")
 
   /** Assemble one envelope row per dataset:
     * {dataset_id, metadata: map<string,string>, files: array<struct>,
@@ -40,45 +35,55 @@ object Envelope {
     val provLit = array(provenance.map { case (n, h, o, v) =>
       struct(lit(n).as("name"), lit(h).as("hash"), lit(o).as("origin"), lit(v).as("version"))
     }: _*)
-    val md = metadata.groupBy("dataset_id")
-      .agg(map_from_entries(collect_list(struct(col("key"), col("value")))).as("metadata"))
-    val files = listing.groupBy("dataset_id")
-      .agg(sort_array(collect_list(struct(
+    // one row per input row, with only its own side's column set: the
+    // aggregation below collects each side's non-null column
+    val tagged = metadata.select(col("dataset_id"), struct(col("key"), col("value")).as("entry"))
+      .unionByName(listing.select(col("dataset_id"), struct(
         col("rel_path"), col("type"), col("size"),
         col("description"), col("edam_term"),
-        col("is_qa_qc"), col("is_data_product")))).as("files"))
-    val contribs = contributors.groupBy("dataset_id")
-      .agg(sort_array(collect_list(struct(
+        col("is_qa_qc"), col("is_data_product")).as("file")), allowMissingColumns = true)
+      .unionByName(contributors.select(col("dataset_id"), struct(
         col("name"), col("affiliation"), col("orcid_id"),
-        col("is_contact"), col("email")))).as("contributors"))
-    val cts = contacts(contributors).groupBy("dataset_id")
-      .agg(sort_array(collect_list(struct(col("name"), col("email"), col("affiliation")))).as("contacts"))
-    md.join(files, Seq("dataset_id"), "full")
-      .join(contribs, Seq("dataset_id"), "left")
-      .join(cts, Seq("dataset_id"), "left")
-      // NullType-coercing coalesce: a dataset with no rows on a side gets
-      // an EMPTY array/map, not null — the envelope schema is total
-      .withColumn("files", expr("coalesce(files, array())"))
-      .withColumn("metadata", expr("coalesce(metadata, map())"))
-      .withColumn("contacts", expr("coalesce(contacts, array())"))
-      .withColumn("contributors", expr("coalesce(contributors, array())"))
+        col("is_contact"), col("email")).as("contributor")), allowMissingColumns = true)
+    val c = col("contributor")
+    tagged.groupBy("dataset_id")
+      .agg(
+        map_from_entries(collect_list(col("entry"))).as("metadata"),
+        sort_array(collect_list(col("file"))).as("files"),
+        sort_array(collect_list(c)).as("contributors"),
+        sort_array(collect_list(when(isTruthy(c.getField("is_contact")), struct(
+          c.getField("name").as("name"), c.getField("email").as("email"),
+          c.getField("affiliation").as("affiliation"))))).as("contacts"))
+      // a dataset is enveloped when it has metadata or files; contributors
+      // alone do not make one. A side with no rows leaves an EMPTY
+      // array/map, not null — the envelope schema is total
+      .filter(size(col("metadata")) > 0 || size(col("files")) > 0)
       .withColumn("dag_provenance_list", provLit)
   }
 
   /** Envelope → canonical JSON document column (K3). */
   def toJsonDoc(envelope: DataFrame): DataFrame =
-    envelope.select(col("dataset_id"),
-      to_json(struct(envelope.columns.filter(_ != "dataset_id").toIndexedSeq.map(col): _*)).as("doc"))
+    envelope.select(col("dataset_id"), jsonDoc(envelope).as("doc"))
 
   /** V1-style envelope checks: required members present and well-formed;
     * returns violations (empty = valid).
     */
-  def validate(envelope: DataFrame): DataFrame = {
-    envelope.select(col("dataset_id"),
-        when(col("dag_provenance_list").isNull || size(col("dag_provenance_list")) === 0,
-          lit("missing dag_provenance_list")).as("v1"),
-        when(col("files").isNull, lit("missing files")).as("v2"),
-        when(col("metadata").isNull, lit("missing metadata")).as("v3"))
-      .select(col("dataset_id"), explode(array_compact(array(col("v1"), col("v2"), col("v3")))).as("violation"))
-  }
+  def validate(envelope: DataFrame): DataFrame =
+    envelope.select(col("dataset_id"), explode(violationArray).as("violation"))
+
+  /** [[toJsonDoc]] and [[validate]] in one pass: (dataset_id, doc,
+    * violations array), so one action yields both.
+    */
+  def checkedJsonDoc(envelope: DataFrame): DataFrame =
+    envelope.select(col("dataset_id"), jsonDoc(envelope).as("doc"), violationArray.as("violations"))
+
+  private def jsonDoc(envelope: DataFrame): Column =
+    to_json(struct(envelope.columns.filter(_ != "dataset_id").toIndexedSeq.map(col): _*))
+
+  private def violationArray: Column =
+    array_compact(array(
+      when(col("dag_provenance_list").isNull || size(col("dag_provenance_list")) === 0,
+        lit("missing dag_provenance_list")),
+      when(col("files").isNull, lit("missing files")),
+      when(col("metadata").isNull, lit("missing metadata"))))
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1/P6/P7/A5/V7 (SURVEY.md §2.1, §2.3): dataset directory-tree scan →
@@ -60,31 +59,34 @@ object FileCatalog {
                                 edamTerm: String, isQaQc: Boolean = false,
                                 isDataProduct: Boolean = false)
 
-  /** P7: ordered first-match annotation — broadcast rules, `rlike` join,
-    * priority `row_number`, template expansion via regexp_extract.
+  /** P7: ordered first-match annotation — a `when` chain over the rules
+    * in order, in the shape of [[typeTag]], so annotating is a projection
+    * of the listing; a templated rule expands `{g1}` with regexp_extract.
+    * Unmatched files get an empty description and EDAM term and false
+    * flags.
     */
   def annotate(listing: DataFrame, rules: Seq[ManifestRule]): DataFrame = {
-    val spark = listing.sparkSession
-    import spark.implicits._
-    val rulesDf = rules.zipWithIndex.map { case (r, i) =>
-      (r.pattern, r.descriptionTemplate, r.edamTerm, r.isQaQc, r.isDataProduct, i)
-    }.toDF("pattern", "description_template", "edam_term", "is_qa_qc", "is_data_product", "priority")
-    val w = Window.partitionBy("rel_path").orderBy("priority")
-    val matched = listing
-      .join(broadcast(rulesDf), expr("rel_path rlike pattern"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .withColumn("description",
-        // only templated rules reference a capture group; guarding keeps
-        // regexp_extract from rejecting group-less patterns
-        when(col("description_template").contains("{g1}"),
-          regexp_replace(col("description_template"), lit("\\{g1\\}"),
-            expr("regexp_extract(rel_path, pattern, 1)")))
-          .otherwise(col("description_template")))
-      .select("rel_path", "description", "edam_term", "is_qa_qc", "is_data_product")
-    listing.join(matched, Seq("rel_path"), "left")
-      .na.fill(Map("description" -> "", "edam_term" -> ""))
-      .na.fill(Map("is_qa_qc" -> false, "is_data_product" -> false))
+    val path = col("rel_path")
+    def annotation(description: Column, edamTerm: String, isQaQc: Boolean, isDataProduct: Boolean) =
+      struct(description.as("description"), lit(edamTerm).as("edam_term"),
+        lit(isQaQc).as("is_qa_qc"), lit(isDataProduct).as("is_data_product"))
+    val unmatched = annotation(lit(""), "", isQaQc = false, isDataProduct = false)
+    val branches = rules.map { r =>
+      // only templated rules reference a capture group; guarding keeps
+      // regexp_extract from rejecting group-less patterns
+      val description =
+        if (r.descriptionTemplate.contains("{g1}"))
+          regexp_replace(lit(r.descriptionTemplate), lit("\\{g1\\}"), regexp_extract(path, r.pattern, 1))
+        else lit(r.descriptionTemplate)
+      path.rlike(r.pattern) -> annotation(description, r.edamTerm, r.isQaQc, r.isDataProduct)
+    }
+    val firstMatch = branches match {
+      case (c, a) +: rest =>
+        rest.foldLeft(when(c, a)) { case (chain, (c, a)) => chain.when(c, a) }.otherwise(unmatched)
+      case _ => unmatched
+    }
+    listing.withColumn("annotation", firstMatch)
+      .select(path +: listing.columns.filter(_ != "rel_path").toIndexedSeq.map(col) :+ col("annotation.*"): _*)
   }
 
   /** A5 (utils.py:770-796): per-type file stats; the MAX_IN_LINE_FILES

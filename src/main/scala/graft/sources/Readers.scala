@@ -58,8 +58,17 @@ object Readers {
     * (SURVEY.md §1.3).
     */
   def metadataTsv(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    import spark.implicits._
     val df = tsv(spark, path)
+    (df, metadataChecks(df))
+  }
+
+  /** The metadata.tsv checks of [[metadataTsv]] over an already-read
+    * frame, as (rule, detail) rows: required columns and delimiter sanity
+    * from the header, the tissue_id/donor_id prefix per row.
+    */
+  def metadataChecks(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val cols = df.columns.toSet
     val violations = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     if (!cols.contains("assay_type") && !cols.contains("dataset_type"))
@@ -73,7 +82,7 @@ object Readers {
           .select(lit("tissue_id_prefix").as("rule"),
                   concat(lit("tissue_id "), col("tissue_id"), lit(" !startswith "), col("donor_id")).as("detail"))
       else spark.emptyDataset[(String, String)].toDF("rule", "detail")
-    (df, violations.toSeq.toDF("rule", "detail").unionByName(rowViolations))
+    violations.toSeq.toDF("rule", "detail").unionByName(rowViolations)
   }
 
   /** S5: whole-doc JSON (multiLine) — one row per document. */

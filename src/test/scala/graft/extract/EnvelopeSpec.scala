@@ -1,9 +1,12 @@
 package graft.extract
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
-class EnvelopeSpec extends SparkSpec {
+class EnvelopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def fixtures = {
@@ -61,5 +64,31 @@ class EnvelopeSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(docs("d1") == goldenD1)
     assert(docs("d2") == goldenD2)
+  }
+
+  test("assemble is one aggregation: a single shuffle keyed on dataset_id, no joins") {
+    val (md, listing, contribs) = fixtures
+    val doc = Envelope.toJsonDoc(Envelope.assemble(md, listing, contribs, Seq(("graft", "abc", "o", "1"))))
+    doc.collect() // finalize AQE so the executed plan is the real one
+    val plan = doc.queryExecution.executedPlan
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"expected one shuffle:\n$plan")
+    assert(shuffles.head.outputPartitioning.toString.contains("dataset_id"), s"shuffle not keyed on dataset_id:\n$plan")
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"expected no joins:\n$plan")
+  }
+
+  test("checkedJsonDoc returns the toJsonDoc document and the validate violations in one row") {
+    val (md, listing, contribs) = fixtures
+    for (prov <- Seq(Seq(("graft", "abc", "o", "1")), Seq.empty)) {
+      val env = Envelope.assemble(md, listing, contribs, prov)
+      val docs = Envelope.toJsonDoc(env).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val violations = Envelope.validate(env).collect().toSeq.groupMap(_.getString(0))(_.getString(1))
+      val checked = Envelope.checkedJsonDoc(env).collect()
+      assert(checked.map(_.getString(0)).toSet == docs.keySet)
+      checked.foreach { r =>
+        assert(r.getString(1) == docs(r.getString(0)))
+        assert(r.getSeq[String](2) == violations.getOrElse(r.getString(0), Seq.empty))
+      }
+    }
   }
 }
